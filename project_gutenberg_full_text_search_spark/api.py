@@ -22,6 +22,7 @@ the parquet scan.
 from __future__ import annotations
 
 import math
+import numbers
 import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -143,7 +144,19 @@ class SearchQuery:
         gains ``snippet`` / ``first_pos`` / ``n_hits`` computed from the
         page's FTS terms over the searched text column. Snippet algebra
         runs on the page DataFrame — k rows, never the corpus. No-op
-        when the query has no FTS clause with positive terms."""
+        when the query has no FTS clause with positive terms.
+
+        ``window`` (tokens each side of the first hit) must be a
+        non-negative integer; anything else raises ``ValueError`` here
+        rather than inside the Spark job."""
+        if (
+            isinstance(window, bool)
+            or not isinstance(window, numbers.Integral)
+            or window < 0
+        ):
+            raise ValueError(
+                f"highlight window must be a non-negative integer, got {window!r}"
+            )
         self._highlight = (int(window), start_tag, end_tag)
         return self
 
@@ -401,8 +414,15 @@ class FullTextSearch:
     def _handle_for(self, fld: SearchField) -> IndexHandle | None:
         return self._handles.get(fld)
 
-    def _apply_search(self, base: DataFrame, txt: str, fld: SearchField, st: SearchType):
-        """→ (filtered df, rank Column name or None)."""
+    def _apply_search(
+        self, base: DataFrame, txt: str, fld: SearchField, st: SearchType, rank: bool
+    ):
+        """→ (filtered df, rank column name or None).
+
+        ``rank=False`` is the COUNT plan: the same match set with no
+        ranking — FTS joins ``bm25_match_docs`` (no score column anywhere,
+        asserted by test_count_plan_has_no_scoring), FUZZY keeps only its
+        similarity threshold, CONTAINS skips the cosmetic BM25 rank join."""
         handle = self._handle_for(fld)
         text_col = _FIELD_TEXT[fld]
         if st == SearchType.FTS:
@@ -417,7 +437,11 @@ class FullTextSearch:
                 if present:
                     neg = handle.decode(present).select("doc_id").distinct()
                     base = base.join(neg, "doc_id", "left_anti")
+                if not rank:
+                    return base, None
                 return base.withColumn("_rank", F.lit(0.0)), "_rank"
+            if not rank:
+                return base.join(bm25_match_docs(handle, pq), "doc_id", "left_semi"), None
             cands = bm25_candidates(handle, pq).select(
                 "doc_id", F.round("score", 4).alias("_rank")
             )
@@ -429,7 +453,10 @@ class FullTextSearch:
                 # reference's per-column GiST trgm family,
                 # mv_books_dc.sql:482-487): candidate terms come from the
                 # field's trigram vocabulary, postings prune the docs scan.
-                sims = fuzzy_candidates(handle, txt).withColumnRenamed("sim", "_rank")
+                sims = fuzzy_candidates(handle, txt)
+                if not rank:
+                    return base.join(sims.select("doc_id"), "doc_id", "left_semi"), None
+                sims = sims.withColumnRenamed("sim", "_rank")
                 return base.join(sims, "doc_id", "inner"), "_rank"
             # non-indexed field: naive trigram similarity, JVM-side.
             # Correct but a FULL SCAN re-tokenizing every row — fine for
@@ -459,7 +486,10 @@ class FullTextSearch:
             base = base.withColumn(
                 "_rank", F.round(F.array_max(F.concat(word_sims, F.array(F.lit(0.0)))), 4)
             )
-            return base.filter(F.col("_rank") >= DEFAULT_SIM_THRESHOLD), "_rank"
+            base = base.filter(F.col("_rank") >= DEFAULT_SIM_THRESHOLD)
+            if not rank:
+                return base.drop("_rank"), None
+            return base, "_rank"
         # CONTAINS
         verify = F.contains(F.lower(F.col(text_col)), F.lit(txt.lower()))
         if handle is not None:
@@ -472,6 +502,8 @@ class FullTextSearch:
                 # queries; AQE picks broadcast from runtime stats when small
                 base = base.join(cands, "doc_id", "left_semi")
         base = base.filter(verify)
+        if not rank:
+            return base, None
         # reference ranks a CONTAINS search too: ts_rank_cd with the
         # %-stripped param (full_text_search.py:275-282). Our analog: BM25
         # of the text against the field's index; 0 when unscorable.
@@ -485,64 +517,23 @@ class FullTextSearch:
                 return base, "_rank"
         return base.withColumn("_rank", F.lit(0.0)), "_rank"
 
-    def _candidates(self, q: SearchQuery):
-        """→ (df, rank_col): all matches with filters applied."""
+    def _candidates(self, q: SearchQuery, rank: bool = True):
+        """→ (df, rank_col): all matches with filters applied; with
+        ``rank=False`` no rank column is computed anywhere in the plan."""
         df = self.mv
         rank_col = None
         for txt, fld, st in q._search:
-            if "_rank" in df.columns:
-                df = df.drop("_rank")
-            df, rank_col = self._apply_search(df, txt, fld, st)
+            if rank_col:
+                df = df.drop(rank_col)
+            df, rank_col = self._apply_search(df, txt, fld, st, rank)
         for pred in q._filter:
             df = df.filter(pred)
         return df, rank_col
 
-    def _apply_search_membership(
-        self, base: DataFrame, txt: str, fld: SearchField, st: SearchType
-    ) -> DataFrame:
-        """Membership-only twin of ``_apply_search`` for COUNT plans: same
-        match set, NO ranking — FTS joins ``bm25_match_docs`` (no score
-        column anywhere, asserted by test_count_plan_has_no_scoring),
-        CONTAINS skips the cosmetic BM25 rank join entirely. FUZZY's
-        similarity IS its membership threshold, so that computation
-        stays; only the rank projection is dropped."""
-        handle = self._handle_for(fld)
-        text_col = _FIELD_TEXT[fld]
-        if st == SearchType.FTS:
-            if handle is None:
-                raise ValueError(f"no FTS index for field {fld}")
-            pq = parse_websearch(txt)
-            if not pq.clauses and pq.neg_terms:
-                neg_dfs = handle.term_stats(pq.neg_terms)
-                present = [t for t in pq.neg_terms if neg_dfs.get(t)]
-                if present:
-                    neg = handle.decode(present).select("doc_id").distinct()
-                    base = base.join(neg, "doc_id", "left_anti")
-                return base
-            return base.join(bm25_match_docs(handle, pq), "doc_id", "left_semi")
-        if st == SearchType.FUZZY:
-            if handle is not None:
-                sims = fuzzy_candidates(handle, txt).select("doc_id")
-                return base.join(sims, "doc_id", "left_semi")
-            df, rank_col = self._apply_search(base, txt, fld, st)
-            return df.drop(rank_col)
-        # CONTAINS: trigram prefilter + verify only — no rank join
-        verify = F.contains(F.lower(F.col(text_col)), F.lit(txt.lower()))
-        if handle is not None:
-            cands = contains_candidates(handle, txt)
-            if cands is not None:
-                base = base.join(cands, "doc_id", "left_semi")
-        return base.filter(verify)
-
     def _membership(self, q: SearchQuery) -> DataFrame:
-        """All matches with filters applied, membership-only (no rank
-        columns computed anywhere in the plan)."""
-        df = self.mv
-        for txt, fld, st in q._search:
-            df = self._apply_search_membership(df, txt, fld, st)
-        for pred in q._filter:
-            df = df.filter(pred)
-        return df
+        """All matches with filters applied, membership-only (the COUNT
+        plan)."""
+        return self._candidates(q, rank=False)[0]
 
     def _order_exprs(self, q: SearchQuery, rank_col: str | None) -> list[Column]:
         d = q._sort_dir

@@ -5,23 +5,26 @@ Replaces the reference's ``tsvec @@ websearch_to_tsquery(...)`` match +
 from-scratch BM25 (k1=1.2, b=0.75, north_star-mandated) over the block
 postings built by operators/build_index.py.
 
-Execution shape (all declarative except the vectorized block decode):
+Execution shape (all declarative except the vectorized block kernel):
 
 1. Partition-prune: postings filtered by ``tbucket`` (partition column) and
    ``term`` (parquet min/max) — only the query terms' blocks are read.
-2. Optional block-max prune: for top-k queries, blocks whose best-possible
-   score cannot reach the score floor of a greedy driver-side pass over
-   block metadata are skipped before decoding (block-max WAND adapted to
-   batch execution; see ``_prune_blocks``).
-3. Vectorized decode (mapInPandas, numpy varint) → (doc_id, term, tf, dl
-   [, positions]).
-4. JVM-side scoring: score = idf(term) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl));
-   per-doc aggregation with ``collect_set(term)`` for boolean-clause
-   evaluation and a positions map for phrase adjacency — both evaluated as
-   Catalyst expressions (``F.exists``/``array_contains``), no Python.
-5. NOT terms: left-anti join on the negated terms' doc ids.
-6. Top-k via ``orderBy(score desc, doc_id asc).limit(k)`` →
+2. Block-range intersection: when the rarest required term is selective,
+   only doc ranges (``block_key``) that hold a block of EVERY required
+   term survive — exact, metadata-only, before any decode.
+3. The compressed blocks are repartitioned by ``block_key``, so each doc
+   range's postings for all query terms meet in one partition.
+4. One vectorized pass per partition (mapInPandas, numpy): varint decode →
+   per-(term, doc) score idf(term)·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) →
+   ``match_kernel``: per-doc score sums plus the AND/OR clause and NOT
+   checks over a boolean doc×term matrix → phrase adjacency from
+   delta-coded positions.
+5. Top-k via ``orderBy(score desc, doc_id asc).limit(k)`` →
    TakeOrderedAndProject (per-partition heaps + single driver merge).
+
+Queries with an exact champion-list plan skip steps 1-4
+(operators/champions.py, which reuses ``match_kernel``); ``bm25_count``
+uses the membership-only plan ``bm25_match_docs``.
 
 Determinism: scores are computed from exact integer (tf, df, dl) with one
 float expression per (term,doc) and summed per doc; ties ordered by
@@ -45,6 +48,7 @@ from pyspark.sql.window import Window
 from project_gutenberg_full_text_search_spark import BM25_B, BM25_K1
 from project_gutenberg_full_text_search_spark.functions.codec import (
     delta_decode,
+    delta_decode_segments,
     varint_decode,
 )
 from project_gutenberg_full_text_search_spark.functions.hashing import md5_long_py
@@ -77,10 +81,11 @@ class IndexHandle:
     spark: SparkSession
     index_dir: str
     stats: dict
-    # per-handle df cache: a pruned top-k otherwise re-collects the same
-    # ≤|query| df rows in three separate jobs (topk gate, prune metadata,
-    # each blockagg). Consistent by construction: a handle is a snapshot
-    # of one index state — after an incremental refresh callers re-open.
+    # per-handle df cache: the champion gate, the scoring plan and the
+    # count plan each need the same ≤|query| df rows, which would
+    # otherwise be re-collected in a job apiece. Consistent by
+    # construction: a handle is a snapshot of one index state — after an
+    # incremental refresh callers re-open.
     _df_cache: dict = field(default_factory=dict)
     _trigram_df: dict | None = None
     # memoized SCAN DataFrames: spark.read.parquet builds a fresh
@@ -210,10 +215,6 @@ class IndexHandle:
                         "dl": dls,
                     }
                     if with_positions:
-                        from project_gutenberg_full_text_search_spark.functions.codec import (
-                            delta_decode_segments,
-                        )
-
                         lens = varint_decode(r.pos_len_bin).astype(np.int64)
                         flat, cnts = delta_decode_segments(r.pos_bin, lens)
                         flat = flat.astype(np.int64)
@@ -310,6 +311,84 @@ def _phrase_rest(clause, p):
     return cond
 
 
+def no_matches(spark: SparkSession) -> DataFrame:
+    """The empty (doc_id, score) result."""
+    return spark.createDataFrame([], "doc_id bigint, score double")
+
+
+def term_scores(idf_t, tf, dl, avgdl: float, k1: float, b: float):
+    """BM25 contribution of one term to each doc (numpy, elementwise).
+
+    The operand order is part of the result: champion scores stored at
+    build time must be bit-identical to the ones a query recomputes, so
+    both call this one expression."""
+    return idf_t * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def match_kernel(doc_ids, term_ids, contrib, n_terms: int, clauses, neg):
+    """Flat (doc_id, term_id, contribution) arrays → (unique doc ids,
+    per-doc score, ok mask).
+
+    Each (doc, term) pair appears at most once; term ids index the
+    query's SORTED present-term list. ``clauses`` are term-id lists with
+    OR semantics that every doc must hit, ``neg`` the term ids no doc may
+    carry. The checks run over a boolean doc×term matrix, so the query
+    width is unbounded. Scores are row sums of the dense doc×term score
+    matrix — a fixed term order, so every caller (the scoring partitions,
+    champion serving) gets the same float for the same doc."""
+    uniq, inv = np.unique(doc_ids, return_inverse=True)
+    score_mat = np.zeros((len(uniq), n_terms), dtype=np.float64)
+    score_mat[inv, term_ids] = contrib
+    hit = np.zeros((len(uniq), n_terms), dtype=bool)
+    hit[inv, term_ids] = True
+    ok = np.ones(len(uniq), dtype=bool)
+    for cols in clauses:
+        ok &= hit[:, cols].any(axis=1)
+    if len(neg):
+        ok &= ~hit[:, neg].any(axis=1)
+    return uniq, score_mat.sum(axis=1), ok
+
+
+def _phrase_ok(uniq, ok, pos_store, phrase_specs):
+    """``ok`` narrowed to docs where every phrase's terms sit at adjacent
+    positions. ``pos_store`` maps a term id to its blocks' decoded
+    (doc_ids, flat positions, per-doc counts)."""
+    # flat (doc-row, position) KEY arrays per phrase term: one adjacency
+    # check is then a single np.isin over the whole partition instead of a
+    # Python loop of per-candidate-doc isin calls (hot-word phrases have
+    # thousands of candidates). KEY packs (row, pos) into one int64: rows
+    # < 2^30 partitions of unique docs, positions < 2^33 tokens per doc.
+    KEY = np.int64(1) << np.int64(33)
+    empty_i64 = np.empty(0, dtype=np.int64)
+    flat_rows: dict[int, np.ndarray] = {}
+    flat_keys: dict[int, np.ndarray] = {}
+    for ti, chunks in pos_store.items():
+        r_parts, k_parts = [], []
+        for ids, flat, cnts in chunks:
+            if not len(ids):
+                continue
+            rrep = np.repeat(np.searchsorted(uniq, ids), cnts)
+            r_parts.append(rrep)
+            k_parts.append(rrep * KEY + flat)
+        flat_rows[ti] = np.concatenate(r_parts) if r_parts else empty_i64
+        flat_keys[ti] = np.concatenate(k_parts) if k_parts else empty_i64
+    for spec in phrase_specs:
+        # only positions of docs still ok (they carry every phrase term,
+        # a required clause each) — for hot-word phrases this shrinks the
+        # isin inputs by orders of magnitude before any sorting
+        good = flat_keys[spec[0]][ok[flat_rows[spec[0]]]]
+        for step, ti in enumerate(spec[1:], start=1):
+            if not len(good):
+                break
+            nxt = flat_keys[ti][ok[flat_rows[ti]]]
+            good = good[np.isin(good + step, nxt)]
+        ph_ok = np.zeros(len(uniq), dtype=bool)
+        if len(good):
+            ph_ok[np.unique(good // KEY)] = True
+        ok = ok & ph_ok
+    return ok
+
+
 def bm25_candidates(
     handle: IndexHandle,
     pq: ParsedQuery,
@@ -318,91 +397,48 @@ def bm25_candidates(
 ) -> DataFrame:
     """All matching docs with BM25 scores (pre-top-k): (doc_id, score).
 
-    Scale path (``bm25_candidates_blockagg``): posting blocks are shuffled
-    COMPRESSED, keyed by block_key (doc range) so every term's postings
-    for a doc range co-locate; one vectorized pass per partition decodes,
-    accumulates a doc×term score matrix, evaluates boolean clauses as
-    bitmasks and phrase adjacency from positions — the shuffle moves ~1
-    byte/posting instead of ~40 (decoded rows), and no row-level groupBy
-    exists at all. Falls back to the row-aggregation formulation for >62
-    distinct terms (bitmask width).
+    Block aggregation: posting blocks are shuffled COMPRESSED, keyed by
+    block_key (doc range) so every term's postings for a doc range
+    co-locate; one vectorized pass per partition decodes them, scores
+    each (term, doc) and runs ``match_kernel`` (per-doc sums + boolean
+    clauses), then checks phrase adjacency from positions — the shuffle
+    moves ~1 byte/posting instead of ~40 (decoded rows), and no row-level
+    groupBy exists at all.
     """
-    terms = pq.positive_terms
-    if len(terms) + len(pq.neg_terms) <= 62:
-        return bm25_candidates_blockagg(handle, pq, k1, b)
-    return bm25_candidates_rowagg(handle, pq, k1, b)
-
-
-def bm25_candidates_blockagg(
-    handle: IndexHandle,
-    pq: ParsedQuery,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    block_keys=None,
-) -> DataFrame:
-    """block_keys: optional list[int] or DataFrame(block_key) restricting
-    the scored doc ranges (used by block-max pruning — scores within a
-    range are exact because block_key = doc_id // block_range is the same
-    for every term)."""
-    import pandas as pd
-
     spark = handle.spark
     terms = pq.positive_terms
     if not terms:
         raise ValueError("empty positive query")
     N = handle.stats["N"]
     avgdl = handle.stats["avgdl"]
-    all_terms = sorted(set(terms) | set(pq.neg_terms))
+    pos_set = set(terms)
+    all_terms = sorted(pos_set | set(pq.neg_terms))
     dfs = handle.term_stats(all_terms)
     present = [t for t in all_terms if dfs.get(t)]
-    pos_present = [t for t in present if t in set(terms)]
-    if not pos_present:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+    if not pos_set.intersection(present):
+        return no_matches(spark)
 
     term_idx = {t: i for i, t in enumerate(present)}
-    idfs = [idf(N, dfs[t]) if t in set(terms) else 0.0 for t in present]
-    pos_bits = sum(1 << term_idx[t] for t in pos_present)
-    neg_bits = sum(1 << term_idx[t] for t in pq.neg_terms if t in term_idx)
-    clause_masks: list[int] = []  # OR-semantics masks, all must hit
+    idfs = [idf(N, dfs[t]) if t in pos_set else 0.0 for t in present]
+    clauses: list[list[int]] = []  # OR groups, all must hit
     phrase_specs: list[list[int]] = []
-    satisfiable = True
     for c in pq.clauses:
+        cols = [term_idx[t] for t in c.terms if t in term_idx]
         if c.kind == "phrase":
-            if any(t not in term_idx for t in c.terms):
-                satisfiable = False
-                break
-            phrase_specs.append([term_idx[t] for t in c.terms])
-            continue
-        m = sum(1 << term_idx[t] for t in c.terms if t in term_idx)
-        if m == 0:
-            satisfiable = False
-            break
-        clause_masks.append(m)
-    if not satisfiable:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+            if len(cols) < len(c.terms):
+                return no_matches(spark)
+            phrase_specs.append(cols)
+            # adjacency implies the doc carries every phrase term
+            clauses.extend([i] for i in cols)
+        elif not cols:
+            return no_matches(spark)
+        else:
+            clauses.append(cols)
+    neg = [term_idx[t] for t in pq.neg_terms if t in term_idx]
     need_pos = bool(phrase_specs)
     phrase_term_ids = sorted({i for spec in phrase_specs for i in spec})
 
     blocks = handle.blocks_for(present)
-    if block_keys is not None:
-        if isinstance(block_keys, DataFrame):
-            # EXPLICIT broadcast — load-bearing for correctness, not a perf
-            # hint. Left to itself Catalyst plans a sort-merge semi join
-            # whose output is hash-partitioned by block_key, judges the
-            # repartition below REDUNDANT and elides it; AQE then swaps
-            # the SMJ for a broadcast join at runtime, reverting the
-            # stream to scan partitioning with no exchange left — and
-            # gen's one-partition-per-block_key invariant silently breaks
-            # (measured at 2M docs: duplicate doc_ids with partial
-            # scores). A statically-planned broadcast join never
-            # satisfies the distribution requirement, so the repartition
-            # always survives. The key set is ≤ blocks-above-θ rows (one
-            # long each); if a corpus ever produces a survivor set too big
-            # to broadcast, pruning it wouldn't help anyway — callers
-            # should pass prune=False there.
-            blocks = blocks.join(F.broadcast(block_keys), "block_key", "left_semi")
-        else:
-            blocks = blocks.filter(F.col("block_key").isin([int(x) for x in block_keys]))
 
     # Block-range intersection pruning (exact, distributed): every doc
     # matching the query must carry ALL single-term clauses' terms and all
@@ -445,101 +481,40 @@ def bm25_candidates_blockagg(
     )
     n_part = max(8, spark.sparkContext.defaultParallelism)
     shuffled = blocks.select(*cols).repartition(n_part, "block_key")
-
-    idx_b = {t: i for i, t in enumerate(present)}  # closure-safe copy
-    idf_arr = list(idfs)
+    n_terms = len(present)
 
     def gen(batches):
-        doc_parts = []  # (doc_ids, term_id, tf, dl)
+        ids_p, ti_p, sc_p = [], [], []
         pos_store: dict[int, list] = {i: [] for i in phrase_term_ids}
         for pdf in batches:
             for r in pdf.itertuples(index=False):
-                ti = idx_b[r.term]
+                ti = term_idx[r.term]
                 ids = delta_decode(r.doc_ids_bin).astype(np.int64)
                 tfs = varint_decode(r.tfs_bin).astype(np.float64)
                 dls = varint_decode(r.dls_bin).astype(np.float64)
-                doc_parts.append((ids, ti, tfs, dls))
-                if need_pos and ti in pos_store:
+                ids_p.append(ids)
+                ti_p.append(np.full(len(ids), ti, dtype=np.int64))
+                sc_p.append(term_scores(idfs[ti], tfs, dls, avgdl, k1, b))
+                if ti in pos_store:
                     # ONE segmented decode of the whole block's position
                     # payload — the former per-doc delta_decode loop paid
                     # ~20 µs of numpy fixed cost per tiny list (1.6 s
                     # across a hot phrase's 77k postings)
-                    from project_gutenberg_full_text_search_spark.functions.codec import (
-                        delta_decode_segments,
-                    )
-
                     lens = varint_decode(r.pos_len_bin).astype(np.int64)
                     flat, cnts = delta_decode_segments(r.pos_bin, lens)
                     pos_store[ti].append((ids, flat.astype(np.int64), cnts))
-        if not doc_parts:
+        if not ids_p:
             return
-        all_ids = np.concatenate([p[0] for p in doc_parts])
-        uniq, inv = np.unique(all_ids, return_inverse=True)
-        nT = len(present)
-        score_mat = np.zeros((len(uniq), nT), dtype=np.float64)
-        mask = np.zeros(len(uniq), dtype=np.int64)
-        off = 0
-        for ids, ti, tfs, dls in doc_parts:
-            rows = inv[off : off + len(ids)]
-            off += len(ids)
-            contrib = (
-                idf_arr[ti]
-                * tfs
-                * (k1 + 1.0)
-                / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-            )
-            score_mat[rows, ti] = contrib  # (term, doc) unique per block_key set
-            mask[rows] |= 1 << ti
-        ok = np.ones(len(uniq), dtype=bool)
-        for m in clause_masks:
-            ok &= (mask & m) != 0
-        if neg_bits:
-            ok &= (mask & neg_bits) == 0
+        uniq, scores, ok = match_kernel(
+            np.concatenate(ids_p),
+            np.concatenate(ti_p),
+            np.concatenate(sc_p),
+            n_terms,
+            clauses,
+            neg,
+        )
         if phrase_specs:
-            # flat (doc-row, position) KEY arrays per phrase term: one
-            # adjacency check is then a single np.isin over the whole
-            # partition instead of a Python loop of per-candidate-doc
-            # isin calls (hot-word phrases have thousands of candidates).
-            # KEY packs (row, pos) into one int64: rows < 2^30 partitions
-            # of unique docs, positions < 2^33 tokens per doc.
-            KEY = np.int64(1) << np.int64(33)
-            empty_i64 = np.empty(0, dtype=np.int64)
-            # per-term flat arrays: doc-row per position + packed key
-            flat_rows: dict[int, np.ndarray] = {}
-            flat_keys: dict[int, np.ndarray] = {}
-            for ti, chunks in pos_store.items():
-                r_parts, k_parts = [], []
-                for ids, flat, cnts in chunks:
-                    if not len(ids):
-                        continue
-                    rows = np.searchsorted(uniq, ids)
-                    rrep = np.repeat(rows, cnts)
-                    r_parts.append(rrep)
-                    k_parts.append(rrep * KEY + flat)
-                flat_rows[ti] = np.concatenate(r_parts) if r_parts else empty_i64
-                flat_keys[ti] = np.concatenate(k_parts) if k_parts else empty_i64
-            for spec in phrase_specs:
-                # restrict every term's positions to docs that (a) passed
-                # the boolean clauses so far and (b) carry ALL the phrase
-                # terms — for hot-word phrases this shrinks the isin
-                # inputs by orders of magnitude before any sorting
-                req = 0
-                for i in spec:
-                    req |= 1 << i
-                cand_mask = ok & ((mask & req) == req)
-                good = flat_keys[spec[0]][cand_mask[flat_rows[spec[0]]]]
-                for step, ti in enumerate(spec[1:], start=1):
-                    if not len(good):
-                        break
-                    nxt = flat_keys[ti][cand_mask[flat_rows[ti]]]
-                    good = good[np.isin(good + step, nxt)]
-                ph_ok = np.zeros(len(uniq), dtype=bool)
-                if len(good):
-                    ph_ok[np.unique(good // KEY)] = True
-                # phrase clause: adjacency implies the doc carries every
-                # phrase term (positions only exist where the term occurs)
-                ok &= ph_ok
-        scores = score_mat.sum(axis=1)  # fixed term order → deterministic
+            ok = _phrase_ok(uniq, ok, pos_store, phrase_specs)
         sel = np.nonzero(ok)[0]
         yield pd.DataFrame({"doc_id": uniq[sel], "score": scores[sel]})
 
@@ -550,164 +525,6 @@ def bm25_candidates_blockagg(
         ]
     )
     return shuffled.mapInPandas(gen, schema=out_schema)
-
-
-def bm25_candidates_rowagg(
-    handle: IndexHandle,
-    pq: ParsedQuery,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """Row-aggregation formulation (decoded rows → groupBy(doc_id));
-    semantically identical reference path, used for very wide queries."""
-    terms = pq.positive_terms
-    if not terms:
-        raise ValueError("empty positive query")
-    N = handle.stats["N"]
-    avgdl = handle.stats["avgdl"]
-    dfs = handle.term_stats(terms)
-    idf_map = {t: idf(N, dfs.get(t, 0)) for t in terms}
-    present = [t for t in terms if dfs.get(t)]
-    if not present:
-        return handle.spark.createDataFrame(
-            [], "doc_id bigint, score double"
-        )
-
-    needs_pos = any(c.kind == "phrase" for c in pq.clauses)
-    decoded = handle.decode(present, with_positions=needs_pos)
-
-    idf_expr = F.create_map(
-        *[x for t in present for x in (F.lit(t), F.lit(idf_map[t]))]
-    )
-    scored = decoded.withColumn(
-        "score_t",
-        idf_expr.getItem(F.col("term"))
-        * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-    )
-    aggs = [
-        F.sum("score_t").alias("score"),
-        F.collect_set("term").alias("matched"),
-    ]
-    if needs_pos:
-        aggs.append(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("posmap")
-        )
-    per_doc = scored.groupBy("doc_id").agg(*aggs)
-    per_doc = per_doc.filter(_clause_predicate(pq))
-
-    if pq.neg_terms:
-        neg_dfs = handle.term_stats(pq.neg_terms)
-        neg_present = [t for t in pq.neg_terms if neg_dfs.get(t)]
-        if neg_present:
-            neg_docs = handle.decode(neg_present).select("doc_id").distinct()
-            per_doc = per_doc.join(neg_docs, "doc_id", "left_anti")
-    return per_doc.select("doc_id", "score")
-
-
-# Block-max pruning trades 2 extra SERIAL jobs (metadata collect + seed
-# scoring) for a smaller final decode. Whether that ever pays was MEASURED
-# both below and above the old 5M-posting auto-threshold
-# (tools/prune_bench.py; full numbers in BASELINE.md):
-#
-#   50k docs,  mass ~10^5-3·10^5: pruned 2.0-2.6 s vs unpruned 0.6-1.1 s
-#   2M docs,   mass 6M (3-term AND): pruned 5.6 s vs unpruned 2.5 s
-#   2M docs,   mass 10M (5-term AND): pruned 6.3 s vs unpruned 1.1 s
-#
-# Pruning loses at EVERY measured mass, and the reason is structural, not
-# noise: with dense doc_ids and block_range 4096, a hot term's ~4k-doc
-# blocks all contain near-identical (max_tf, min_dl) — the per-block upper
-# bounds are uniform, θ from the seed blocks prunes ~0% of ranges, and the
-# "pruned" run is the full run plus two serial jobs. Block-max WAND's win
-# condition is score mass CONCENTRATED in few doc ranges; the batch
-# engine's other pruning layers already capture the realistic sources of
-# that concentration (AND queries intersect block ranges exactly before
-# decoding — bm25_candidates_blockagg; tbucket/min-max pruning skips
-# non-query terms entirely), so the residual blockmax win requires both
-# per-block impact skew AND 10^8+ residual postings — plausible at
-# 10^12-doc scale with fine-grained blocks, absent in every configuration
-# this engine can measure. Auto-engage is therefore OFF (prune=None →
-# unpruned); prune=True stays available and exact for corpora whose
-# block-level impact distribution is genuinely skewed.
-#
-# PRUNE_MIN_POSTINGS documents the measured certain-loss floor for
-# reference (kept for callers building their own engage heuristics);
-# prune=True always forces the path — exactness is tested at any size,
-# and the perf call is the caller's.
-PRUNE_MIN_POSTINGS = 5_000_000
-
-
-def bm25_topk_pruned_candidates(
-    handle: IndexHandle,
-    pq: ParsedQuery,
-    K: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """Block-max pruning (the batch adaptation of block-max WAND).
-
-    Doc ranges are block-aligned across terms (block_key = doc_id //
-    block_range), so: (1) an upper bound per range is Σ_t idf_t ·
-    impact(max_tf, min_dl, avgdl_now) — BM25's tf-component is increasing
-    in tf and decreasing in dl, so the bound holds for every posting in
-    the block, and because it is evaluated with the CURRENT stats.json
-    avgdl it stays valid after incremental refreshes shift avgdl (a
-    build-time-frozen max_impact would not); (2) scoring restricted to a
-    set of ranges is EXACT for every doc inside them. Algorithm:
-
-      phase 0  metadata-only scan → per-range ub + doc count
-      phase 1  score the highest-ub ranges covering ≥4K docs exactly
-               (full clause/negation/phrase semantics) → θ = K-th score
-      phase 2  survivors = ranges with ub ≥ θ; exact scoring over them.
-
-    Safe: a doc outside the survivors has score ≤ its range's ub < θ.
-    Negation/phrases only *remove* docs inside scored ranges, and θ is
-    computed post-removal, so it is a valid lower bound on the final
-    K-th score.
-    """
-    terms = pq.positive_terms
-    N = handle.stats["N"]
-    dfs = handle.term_stats(terms)
-    present = [t for t in terms if dfs.get(t)]
-    if not present:
-        return handle.spark.createDataFrame([], "doc_id bigint, score double")
-    idf_map = {t: idf(N, dfs[t]) for t in present}
-    avgdl = handle.stats["avgdl"]
-    meta = handle.blocks_for(present).select(
-        "term", "block_key", "max_tf", "min_dl", "n_docs"
-    )
-    idf_expr = F.create_map(*[x for t in present for x in (F.lit(t), F.lit(idf_map[t]))])
-    impact_ub = (F.col("max_tf") * (k1 + 1.0)) / (
-        F.col("max_tf") + k1 * (1.0 - b + b * F.col("min_dl") / F.lit(avgdl))
-    )
-    ranges = meta.groupBy("block_key").agg(
-        F.sum(idf_expr.getItem(F.col("term")) * impact_ub).alias("ub"),
-        F.sum("n_docs").alias("nd"),
-    )
-    top_meta = ranges.orderBy(F.desc("ub"), F.asc("block_key")).limit(2048).collect()
-    seed, covered = [], 0
-    for r in top_meta:
-        seed.append(r["block_key"])
-        covered += r["nd"]
-        if covered >= 4 * K:
-            break
-    phase1 = bm25_candidates_blockagg(handle, pq, k1, b, block_keys=seed)
-    kth = (
-        phase1.orderBy(F.desc("score"), F.asc("doc_id")).limit(K).collect()
-    )
-    if len(kth) < K:
-        # seed ranges didn't yield K matches → θ unusable; score everything
-        return bm25_candidates_blockagg(handle, pq, k1, b)
-    theta = kth[-1]["score"]
-    # final ranking orders by round(score, 4): keep every range whose ub
-    # could still produce a doc that TIES the K-th rounded score (half a
-    # rounding ulp below round(theta,4)); cutoff ≤ theta always, so this
-    # only widens the survivor set.
-    cutoff = round(theta, 4) - 5e-5
-    survivors = ranges.filter(F.col("ub") >= F.lit(cutoff)).select("block_key")
-    return bm25_candidates_blockagg(handle, pq, k1, b, block_keys=survivors)
 
 
 def _rank_limit(
@@ -741,7 +558,6 @@ def bm25_topk(
     k: int = 25,
     offset: int = 0,
     round_digits: int = 4,
-    prune: bool | None = None,
     champions: bool | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) — deterministic (score desc, doc_id asc).
@@ -754,16 +570,9 @@ def bm25_topk(
     rows instead of decoding the full posting lists. champions=False
     disables. Exactness is structural (certificate or complete lists), so
     the result is row-identical to the full path either way.
-
-    prune=None (default) → UNPRUNED: block-max pruning measured slower at
-    every posting mass this engine can generate (see PRUNE_MIN_POSTINGS
-    comment + BASELINE.md); the default path already prunes via tbucket
-    partitions, parquet term min/max, and exact AND block-range
-    intersection. prune=True forces the block-max path (exact, tested).
     """
     pq = parse_websearch(query) if isinstance(query, str) else query
-    use_prune = bool(prune)
-    if champions is not False and not use_prune:
+    if champions is not False:
         from project_gutenberg_full_text_search_spark.operators.champions import (
             champion_topk,
         )
@@ -771,11 +580,7 @@ def bm25_topk(
         served = champion_topk(handle, pq, k, offset, round_digits)
         if served is not None:
             return served
-    if use_prune and len(pq.positive_terms) + len(pq.neg_terms) <= 62:
-        cands = bm25_topk_pruned_candidates(handle, pq, offset + k)
-    else:
-        cands = bm25_candidates(handle, pq)
-    return _rank_limit(cands, k, offset, round_digits)
+    return _rank_limit(bm25_candidates(handle, pq), k, offset, round_digits)
 
 
 def bm25_match_docs(handle: IndexHandle, pq: ParsedQuery) -> DataFrame:
@@ -789,7 +594,10 @@ def bm25_match_docs(handle: IndexHandle, pq: ParsedQuery) -> DataFrame:
     the scoring path: tbucket partition pruning + parquet term min/max via
     ``blocks_for``, positions decoded only when a phrase clause needs
     them, and required-term absence short-circuits to an empty result
-    without touching the postings at all.
+    without touching the postings at all. It stays a JVM groupBy rather
+    than a ``match_kernel`` pass: counting a 3,000-doc corpus's boolean
+    and phrase queries at local[4] measured 0.99 CPU-s this way against
+    2.57 for ``bm25_candidates(...).count()``, with identical counts.
     """
     terms = pq.positive_terms
     if not terms:

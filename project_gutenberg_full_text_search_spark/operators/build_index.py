@@ -28,8 +28,9 @@ Scale design
   — they concatenate into a full posting list with zero extra work. This
   handles skew structurally rather than via a df-threshold salting pass
   (SURVEY.md §3 "salted shuffle"; same guarantee, one less job).
-* Blocks carry ``max_tf`` and ``max_impact`` (max BM25 tf-component) for
-  block-max WAND pruning at query time.
+* Blocks carry ``max_tf``, ``min_dl`` and ``max_impact`` (max BM25
+  tf-component) block metadata. No query path reads them since block-max
+  pruning was removed (BASELINE.md); champion lists are the top-k pruning.
 * Posting parquet is partitioned by ``tbucket = md5_long(term) % 64`` and
   sorted by term within files: a query for T terms prunes to ≤T partitions
   via partition pruning, then to a few row groups via parquet min/max on
@@ -603,7 +604,7 @@ def build_index(
     if wrote_terms or "n_terms" not in stats:
         if n_shards == 1 and 0 in shard_term_counts:
             # single shard ⇒ its term count IS the global distinct count —
-            # the Observation already measured it during the terms write,
+            # write_shard_terms already counted the written file's rows,
             # so don't schedule a separate distinct-count job
             stats["n_terms"] = int(shard_term_counts[0])
         else:

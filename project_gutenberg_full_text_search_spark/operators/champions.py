@@ -1,9 +1,9 @@
 """Per-term static champion lists: exact top-k for hot terms without
 decoding their full posting lists.
 
-The measured-win replacement for block-max pruning (which loses
-structurally on uniform per-block impact corpora — see the
-PRUNE_MIN_POSTINGS study in bm25.py / BASELINE.md): a hot single-term
+The measured-win replacement for block-max pruning (which lost
+structurally on uniform per-block impact corpora and was removed — see
+the round-4 study in BASELINE.md): a hot single-term
 top-20 otherwise decodes millions of postings to keep 20 rows. The
 classic champion-list fix (Manning/Raghavan/Schütze IIR §7.1.3) works
 without *block-level* impact skew because it selects a GLOBAL top-C per
@@ -15,7 +15,7 @@ unconditionally exact.** ``bm25_topk`` ranks by ``(round(score, 4) desc,
 doc_id asc)`` — a TOTAL order (doc_id is unique). The champion list for a
 term is the first ``C`` rows of the full path's final ordering for that
 term's single-term query, with the build-time score stored (computed with
-the bitwise-identical expression the blockagg kernel uses). Serving
+``bm25.term_scores``, the expression the scoring path uses). Serving
 ``k+offset ≤ C`` is then literally "return the list's first k+offset
 rows re-ranked by the same tail" — no approximation, no tie hazard at the
 boundary, even on corpora whose hot-term scores are completely flat after
@@ -138,6 +138,7 @@ def build_champions(
     from project_gutenberg_full_text_search_spark.operators.bm25 import (
         IndexHandle,
         idf,
+        term_scores,
     )
     from project_gutenberg_full_text_search_spark.operators.build_index import (
         tbucket_col,
@@ -184,12 +185,15 @@ def build_champions(
 
     _BLOCK_COLS = ("term", "doc_ids_bin", "tfs_bin", "dls_bin")
 
-    def _heavy_blocks(h_df, df_map=None):
+    def _heavy_blocks(df_map, keep):
+        """One path's posting blocks: the pruned scan of ``df_map``'s
+        terms, or — past the literal cap — the broadcast join against the
+        heavy terms whose df satisfies ``keep``."""
         if df_map is not None:
             return handle.blocks_for(sorted(df_map)).select(*_BLOCK_COLS)
         return (
             handle.postings()
-            .join(F.broadcast(h_df), "term")
+            .join(F.broadcast(heavy.filter(keep)), "term")
             .select("df", *_BLOCK_COLS)
         )
 
@@ -214,16 +218,15 @@ def build_champions(
             ids = np.concatenate([p[0] for p in parts])
             tfs = np.concatenate([p[1] for p in parts])
             dls = np.concatenate([p[2] for p in parts])
-            tfd = tfs.astype(np.float64)
-            dld = dls.astype(np.float64)
-            # bitwise-identical expression shape to the blockagg
-            # scoring kernel (bm25_candidates_blockagg): same operand
-            # order → same doubles → same rounded ranks at serve
-            score = (
-                term_idf[term]
-                * tfd
-                * (k1 + 1.0)
-                / (tfd + k1 * (1.0 - b + b * dld / avgdl))
+            # the scoring path's own expression → same doubles → same
+            # rounded ranks at serve
+            score = term_scores(
+                term_idf[term],
+                tfs.astype(np.float64),
+                dls.astype(np.float64),
+                avgdl,
+                k1,
+                b,
             )
             if len(ids) > C:
                 # hazard rows bypass the numpy competition entirely
@@ -274,12 +277,12 @@ def build_champions(
         None if heavy_lit is None
         else {r["term"]: int(r["df"]) for r in heavy_lit if r["df"] > int(C)}
     )
-    complete = _heavy_blocks(
-        heavy.filter(F.col("df") <= int(C)), comp_map
-    ).mapInPandas(make_gen(comp_map), schema=CHAMP_SCHEMA)
-    cand = _heavy_blocks(
-        heavy.filter(F.col("df") > int(C)), hot_map
-    ).mapInPandas(make_gen(hot_map), schema=CHAMP_SCHEMA)
+    complete = _heavy_blocks(comp_map, F.col("df") <= int(C)).mapInPandas(
+        make_gen(comp_map), schema=CHAMP_SCHEMA
+    )
+    cand = _heavy_blocks(hot_map, F.col("df") > int(C)).mapInPandas(
+        make_gen(hot_map), schema=CHAMP_SCHEMA
+    )
     # tournament in the SERVE ordering: (rounded score desc, doc_id asc)
     # — F.round here is the same function the serve tail applies, so the
     # surviving C rows are exactly the full path's first C result rows
@@ -383,6 +386,12 @@ def champion_topk(
     plan exists (caller falls back). See module docstring for the two
     servable shapes; exactness is structural (serve-order selection /
     complete lists), never probabilistic."""
+    from project_gutenberg_full_text_search_spark.operators.bm25 import (
+        _rank_limit,
+        match_kernel,
+        no_matches,
+    )
+
     meta = champions_meta(handle)
     if meta is None or round_digits != meta.get("round_digits", ROUND_DIGITS):
         return None
@@ -398,7 +407,7 @@ def champion_topk(
     present_pos = [t for t in terms if dfs.get(t)]
     present_neg = [t for t in pq.neg_terms if dfs.get(t)]
     if not present_pos:
-        return handle.spark.createDataFrame([], "doc_id bigint, score double")
+        return no_matches(handle.spark)
 
     single = (
         len(pq.clauses) == 1
@@ -433,39 +442,30 @@ def champion_topk(
         if int(counts.get(t, 0)) != min(dfs[t], C):
             return None
 
-    # per-(doc, term) stored scores → per-doc sums + clause bitmasks, in
-    # the same sorted term order as the blockagg kernel (summation order
-    # is part of float determinism)
+    # stored per-(doc, term) scores through the scoring path's kernel:
+    # same sorted term order → same per-doc sums (summation order is part
+    # of float determinism); negated-only terms only mask
     order_terms = sorted(set(present_pos) | set(present_neg))
     term_idx = {t: i for i, t in enumerate(order_terms)}
-    pos_set = set(present_pos)
-    ids_all = rows["doc_id"].to_numpy(np.int64)
-    uniq, inv = np.unique(ids_all, return_inverse=True)
-    nT = len(order_terms)
-    score_mat = np.zeros((len(uniq), nT), dtype=np.float64)
-    mask = np.zeros(len(uniq), dtype=np.int64)
-    sc_all = rows["score"].to_numpy(np.float64)
-    ti_all = rows["term"].map(term_idx).to_numpy(np.int64)
-    for t, ti in term_idx.items():
-        sel = ti_all == ti
-        r = inv[sel]
-        if t in pos_set:
-            score_mat[r, ti] = sc_all[sel]
-        mask[r] |= 1 << ti
-
-    ok = np.ones(len(uniq), dtype=bool)
+    clauses = []
     for c in pq.clauses:
-        m = sum(1 << term_idx[t] for t in c.terms if t in term_idx)
-        if m == 0:
-            return handle.spark.createDataFrame([], "doc_id bigint, score double")
-        ok &= (mask & m) != 0
-    neg_bits = sum(1 << term_idx[t] for t in present_neg)
-    if neg_bits:
-        ok &= (mask & neg_bits) == 0
-    scores = score_mat.sum(axis=1)
+        cols = [term_idx[t] for t in c.terms if t in term_idx]
+        if not cols:
+            return no_matches(handle.spark)
+        clauses.append(cols)
+    ti_all = rows["term"].map(term_idx).to_numpy(np.int64)
+    pos_set = set(present_pos)
+    is_pos = np.array([t in pos_set for t in order_terms], dtype=bool)
+    contrib = np.where(is_pos[ti_all], rows["score"].to_numpy(np.float64), 0.0)
+    uniq, scores, ok = match_kernel(
+        rows["doc_id"].to_numpy(np.int64),
+        ti_all,
+        contrib,
+        len(order_terms),
+        clauses,
+        [term_idx[t] for t in present_neg],
+    )
 
     out = pd.DataFrame({"doc_id": uniq[ok], "score": scores[ok]})
     sdf = handle.spark.createDataFrame(out, schema="doc_id bigint, score double")
-    from project_gutenberg_full_text_search_spark.operators.bm25 import _rank_limit
-
     return _rank_limit(sdf, k, offset, round_digits)

@@ -415,27 +415,6 @@ def simhash(
     )
 
 
-def simhash_candidate_pairs(
-    sim_df: DataFrame, id_col: str = "doc_id", prefix_bits: int = 8, bits: int = 16
-) -> DataFrame:
-    """Pairs sharing the top `prefix_bits` of the `bits`-wide simhash
-    (bucket join). `bits` must match the width passed to simhash()."""
-    if not 0 < prefix_bits <= bits:
-        raise ValueError(f"prefix_bits must be in (0, {bits}]")
-    b = sim_df.withColumn("bucket", F.shiftright("simhash", bits - prefix_bits))
-    a1 = b.select(F.col("bucket"), F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    a2 = b.select(F.col("bucket"), F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    return (
-        a1.join(a2, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))),
-        )
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def neardup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",

@@ -2,16 +2,14 @@
 
 A1/A2 group-counts (full_text_search.py:391-429), A3 point lookup
 (431-444), A4 sampled top-subject facet (446-494), A5 LoCC hierarchy
-children (helpers.py:130-168), A6 per-shelf counts/samples
-(opds.py:700-714, 533-567) — the reference issues N queries in a loop;
-we do ONE grouped aggregation / one window.
+children (helpers.py:130-168) — the reference issues N queries in a
+loop; we do ONE grouped aggregation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def all_bookshelves(bookshelves: DataFrame, bridge: DataFrame) -> DataFrame:
@@ -96,17 +94,3 @@ def locc_children(loccs: DataFrame, parent: str | None = None) -> DataFrame:
         .agg((F.count("kpk") > 0).alias("has_children"))
         .orderBy(F.length("pk"), "pk")
     )
-
-
-def per_group_counts(bridge: DataFrame, key: str) -> DataFrame:
-    """A6: one grouped agg replacing the reference's N-queries loop
-    (opds.py:700-714)."""
-    return bridge.groupBy(key).agg(F.count("*").alias("count"))
-
-
-def sample_per_group(
-    df: DataFrame, group_col: str, n: int = 15, seed: int = 42
-) -> DataFrame:
-    """A6: random N per group via one window (opds.py:533-567 loops)."""
-    w = Window.partitionBy(group_col).orderBy(F.rand(seed))
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")

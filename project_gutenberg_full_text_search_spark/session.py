@@ -10,6 +10,52 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the old fixed driver heap, kept as the ceiling of the derived one
+_MAX_DRIVER_MB = 48 * 1024
+# cgroup v2, then v1: a container's limit when it is below the host's RAM
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_cpus() -> int:
+    """Cores a local session uses: ``SPARK_GRAFT_CPUS`` if set, else the
+    CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def physical_memory_bytes() -> int:
+    """Physical memory (``MemTotal``), or the cgroup memory limit when
+    that is lower."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # "max" means unlimited
+            total = min(total, int(raw))
+    return total
+
+
+def driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEM`` if set, else half of physical
+    memory capped at 48g. A fixed 48g heap outgrows a 16 GB host: the JVM
+    grows into it and the kernel kills it mid-run."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    half_mb = physical_memory_bytes() // 2 // 2**20
+    return f"{min(_MAX_DRIVER_MB, half_mb)}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -22,9 +68,10 @@ def get_spark(
     Defaults: AQE on (runtime coalesce + skew-join splitting), Arrow on
     (vectorized pandas-UDF transfer), shuffle partitions sized to the local
     core count instead of the 200 default (local mode has no network
-    shuffle — oversplitting only adds task overhead).
+    shuffle — oversplitting only adds task overhead). Core count and
+    driver heap come from the host (``host_cpus``, ``driver_memory``).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; local[*] → cpu count; else leave a cluster-ish default
@@ -43,7 +90,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Broadcast decisions are AQE-ONLY: the static planner's file-size
         # estimates pick the wrong build side exactly when it matters
@@ -53,8 +100,8 @@ def get_spark(
         # mis-estimate is an executor OOM). With the static threshold off,
         # joins plan as shuffles and AQE converts to broadcast from the
         # REAL materialized sizes — the estimate-vs-reality gap that bit
-        # the blockagg semi-join in round 4 (bm25.py:390-404) cannot
-        # recur, and explicit F.broadcast hints still apply unchanged.
+        # a block-range semi-join in round 4 cannot recur, and explicit
+        # F.broadcast hints still apply unchanged.
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -86,9 +133,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -31,10 +31,9 @@ Observation riding the norms write), summed driver-side: one tiny JSON
 per epoch instead of a corpus-wide norms re-scan, and replay-idempotent
 because a replayed epoch overwrites its own manifest. At 10^12 files an
 epoch therefore costs only shard-sized work.
-avgdl drift after a refresh is safe for block-max pruning: the query-time
-upper bound is computed from per-block (max_tf, min_dl) with the CURRENT
-stats.json avgdl (operators/bm25.py), never from a build-time-frozen
-impact value.
+avgdl drift after a refresh is safe: queries score with the CURRENT
+stats.json avgdl (operators/bm25.py), and champion lists built against
+the old stats stop serving until rebuilt (operators/champions.py).
 """
 
 from __future__ import annotations

@@ -8,14 +8,16 @@ import pytest
 
 from project_gutenberg_full_text_search_spark.corpus import gen_corpus, gen_corpus_pandas
 from project_gutenberg_full_text_search_spark.operators.build_index import build_index
-from project_gutenberg_full_text_search_spark.session import get_spark
+from project_gutenberg_full_text_search_spark.session import get_spark, host_cpus
 
 N_DOCS_SMALL = 300
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="pgfts_tests", shuffle_partitions=8)
+    s = get_spark(
+        master=f"local[{host_cpus()}]", app_name="pgfts_tests", shuffle_partitions=8
+    )
     yield s
 
 

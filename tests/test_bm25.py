@@ -59,74 +59,11 @@ def test_pagination_slices_consistently(handle, oracle):
     assert page2["doc_id"].tolist() == full["doc_id"].tolist()[10:20]
 
 
-@pytest.mark.parametrize("q", QUERIES)
-def test_pruned_rank_identity(handle, oracle, q):
-    """Block-max pruning must be invisible: forced-prune top-k equals the
-    oracle exactly (same matrix as the unpruned test)."""
-    got = bm25_topk(handle, q, k=15, prune=True).toPandas()
-    exp = oracle.search(q, k=15)
-    assert got["doc_id"].tolist() == exp["doc_id"].tolist(), f"docs differ for {q!r}"
-    assert got["score"].tolist() == pytest.approx(exp["score"].tolist(), abs=1e-4)
-
-
-def test_pruned_pagination(handle, oracle):
-    q = "index merge"
-    full = bm25_topk(handle, q, k=30, prune=True).toPandas()
-    page2 = bm25_topk(handle, q, k=10, offset=10, prune=True).toPandas()
-    assert page2["doc_id"].tolist() == full["doc_id"].tolist()[10:20]
-
-
 def test_determinism_across_runs(handle):
     q = "index or query"
     a = bm25_topk(handle, q, k=20).toPandas()
     b = bm25_topk(handle, q, k=20).toPandas()
     pd.testing.assert_frame_equal(a, b)
-
-
-def test_blockagg_block_keys_dataframe_matches_list(handle, spark):
-    """Restricting blockagg by a block_key DATAFRAME must equal the same
-    restriction by a python list — regression for a partitioning hazard:
-    Catalyst planned the semi join sort-merge (output hash-partitioned by
-    block_key), elided the explicit repartition as redundant, then AQE
-    swapped in a broadcast join at runtime, leaving NO exchange — gen's
-    one-partition-per-block_key invariant broke and per-doc aggregation
-    split into duplicate partial rows (found at 2M docs, 'merge or
-    block'). The shipped fix forces a statically-planned broadcast semi
-    join so the repartition always survives."""
-    from pyspark.sql import functions as F
-
-    from project_gutenberg_full_text_search_spark.operators.bm25 import (
-        bm25_candidates_blockagg,
-    )
-    from project_gutenberg_full_text_search_spark.plans.parser import parse_websearch
-
-    pq = parse_websearch("index or query")  # two hot terms, OR semantics
-    keys_df = (
-        handle.blocks_for(pq.positive_terms).select("block_key").distinct()
-    )
-    keys = [r["block_key"] for r in keys_df.collect()]
-    via_df = (
-        bm25_candidates_blockagg(handle, pq, block_keys=keys_df)
-        .withColumn("score", F.round("score", 4))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .toPandas()
-    )
-    via_list = (
-        bm25_candidates_blockagg(handle, pq, block_keys=keys)
-        .withColumn("score", F.round("score", 4))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .toPandas()
-    )
-    # no duplicate per-doc rows (the failure mode was partial duplicates)
-    assert via_df.doc_id.is_unique
-    assert via_df.doc_id.tolist() == via_list.doc_id.tolist()
-    assert via_df.score.tolist() == via_list.score.tolist()
-    # and the plan actually retains an exchange above the semi join
-    plan = (
-        bm25_candidates_blockagg(handle, pq, block_keys=keys_df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def test_postings_scan_partition_pruned_and_pushed(handle):
@@ -154,3 +91,29 @@ def test_postings_scan_partition_pruned_and_pushed(handle):
     assert j >= 0
     pushed = plan[j : plan.index("]", j) + 1]
     assert "In(term" in pushed, pushed
+
+
+def _wide_or_queries(oracle, width=64):
+    """An OR over ``width`` distinct corpus terms (every n-th of the sorted
+    vocabulary, so hot and rare terms mix), and the same OR with the most
+    frequent remaining vocabulary term negated."""
+    vocab = sorted(t for t in oracle.df if t != "or")
+    terms = vocab[:: len(vocab) // width][:width]
+    neg = max((t for t in vocab if t not in terms), key=lambda t: (oracle.df[t], t))
+    wide = " or ".join(terms)
+    return wide, f"{wide} -{neg}"
+
+
+def test_wide_or_beyond_62_terms(handle, oracle):
+    """More distinct terms than an int64 clause bitmask can hold: scores,
+    the OR clause and the negation must still match the oracle."""
+    from project_gutenberg_full_text_search_spark.plans.parser import parse_websearch
+
+    for q in _wide_or_queries(oracle):
+        pq = parse_websearch(q)
+        assert len(set(pq.positive_terms) | set(pq.neg_terms)) >= 63
+        got = bm25_topk(handle, q, k=25).toPandas()
+        exp = oracle.search(q, k=25)
+        assert got["doc_id"].tolist() == exp["doc_id"].tolist()
+        assert got["score"].tolist() == pytest.approx(exp["score"].tolist(), abs=1e-4)
+        assert bm25_count(handle, q) == oracle.count(q)

@@ -73,6 +73,20 @@ def test_complete_mode_serves_exactly(champ_index):
         assert rows(served) == rows(bm25_topk(h, q, k=10, champions=False)), q
 
 
+def test_complete_mode_serves_wide_or(champ_index):
+    """A complete-list OR wider than an int64 clause bitmask (63+ terms,
+    plus a negation) still serves, row-identical to the full path."""
+    h = champ_index
+    df_map = {r.term: r.df for r in h.terms().collect()}
+    complete = sorted(t for t, d in df_map.items() if 20 <= d <= 50 and t != "or")
+    assert len(complete) >= 64, "corpus must yield 64 complete-range terms"
+    wide = " or ".join(complete[:63])
+    for q in (wide, f"{wide} -{complete[63]}"):
+        served = CH.champion_topk(h, parse_websearch(q), k=10)
+        assert served is not None, q
+        assert rows(served) == rows(bm25_topk(h, q, k=10, champions=False)), q
+
+
 def test_hot_term_serves_exactly(champ_index):
     """df > C single term — the headline case: champion selection runs in
     the serve ordering (round(score,4) desc, doc_id asc), so the list IS
@@ -199,10 +213,13 @@ def test_static_prune_matches_join_fallback(champ_index, monkeypatch):
 
     pruned = table()  # fixture built with the static-prune path
     monkeypatch.setattr(CH, "_MAX_STATIC_TERMS", 0)
-    CH.build_champions(spark, h.index_dir, C=50, min_df=20)
-    h._scan_cache.pop("champions", None)
-    assert table() == pruned
-    monkeypatch.undo()
-    # leave the fixture's table in place for any later module tests
-    CH.build_champions(spark, h.index_dir, C=50, min_df=20)
-    h._scan_cache.pop("champions", None)
+    try:
+        CH.build_champions(spark, h.index_dir, C=50, min_df=20)
+        h._scan_cache.pop("champions", None)
+        assert table() == pruned
+    finally:
+        # restore the fixture's statically-pruned table for later module
+        # tests, also when the rebuild or the assert failed
+        monkeypatch.undo()
+        CH.build_champions(spark, h.index_dir, C=50, min_df=20)
+        h._scan_cache.pop("champions", None)

@@ -755,3 +755,14 @@ def test_highlight_noop_without_fts(fts):
     env = fts.execute(fts.query(Crosswalk.MINI).etext(42).highlight())
     assert env["total"] == 1
     assert "snippet" not in env["results"][0]
+
+
+@pytest.mark.parametrize("window", [-1, 2.5, "8", True, None])
+def test_highlight_rejects_bad_window(window):
+    """A window that is not a non-negative int fails at the API boundary,
+    not as a negative F.slice length inside the Spark job."""
+    from project_gutenberg_full_text_search_spark.api import SearchQuery
+
+    with pytest.raises(ValueError, match="window"):
+        SearchQuery().highlight(window=window)
+    assert SearchQuery().highlight(window=0)._highlight[0] == 0

@@ -144,25 +144,6 @@ def test_incremental_epoch_is_shard_sized(spark, split_corpus):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_pruning_safe_after_avgdl_drift(spark, split_corpus):
-    """Block-max pruning must stay exact when appended docs shift avgdl:
-    the per-block upper bound is derived from (max_tf, min_dl) with the
-    refreshed avgdl, never from a build-time-frozen impact."""
-    full, base, extra = split_corpus
-    d = tempfile.mkdtemp(prefix="pgfts_drift_")
-    try:
-        build_index(spark, base, d, input_fingerprint="base120")
-        append_docs(spark, extra, d, "inc_0")
-        h = IndexHandle.open(spark, d)
-        for q in ["merge query", "index", "index or query"]:
-            pruned = bm25_topk(h, q, k=15, prune=True).toPandas()
-            exact = bm25_topk(h, q, k=15, prune=False).toPandas()
-            assert pruned.doc_id.tolist() == exact.doc_id.tolist(), q
-            assert pruned.score.tolist() == exact.score.tolist(), q
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 # ---- watermarked windowed aggregation + stateful dedup (operators.py) ----
 
 def _events_schema():

@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from project_gutenberg_full_text_search_spark.session import get_spark
+from project_gutenberg_full_text_search_spark.session import get_spark, host_cpus
 
 HEADLINE = [
     "fts_single_hot", "fts_and", "fts_or", "fts_not", "fts_phrase",
@@ -49,7 +49,7 @@ def _registry():
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus,
                       app_name="bench_extra")
     queries = _registry()

@@ -11,8 +11,9 @@ Prints one JSON line:
                      "champ_sec": ..., "full_sec": ..., "speedup": ...,
                      "rows_equal": true}}}
 
-Reuses the prune_bench corpus/index cache under /dev/shm (same
-fingerprint); results are recorded in BASELINE.md. Expected shape:
+Caches its corpus and index under /dev/shm (the names and fingerprint of
+the round-4 block-max study, so that study's cache is reused); results
+are recorded in BASELINE.md. Expected shape:
 single-hot serves (the whole point — top-20 of a ~2M-posting term from a
 C-row side table), complete-range OR serves, hot AND/OR falls back by
 design (exactness: per-term champion rows cannot produce cross-term
@@ -29,12 +30,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from project_gutenberg_full_text_search_spark.session import host_cpus  # noqa: E402
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--docs", type=int, default=2_000_000)
     p.add_argument("--length-scale", type=float, default=2.0)
-    p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    p.add_argument("--cpus", type=int, default=host_cpus())
     p.add_argument("--k", type=int, default=20)
     p.add_argument("--samples", type=int, default=3)
     args = p.parse_args()

@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
+from project_gutenberg_full_text_search_spark.session import host_cpus  # noqa: E402
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
@@ -41,9 +43,7 @@ def main() -> None:
     p.add_argument("--nprobe", type=int, default=8)
     p.add_argument("--queries", type=int, default=5)
     p.add_argument("--samples", type=int, default=3)
-    p.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    p.add_argument("--cpus", type=int, default=host_cpus())
     args = p.parse_args()
 
     from pyspark.sql import functions as F

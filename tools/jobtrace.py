@@ -20,11 +20,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     filt = sys.argv[2] if len(sys.argv) > 2 else ""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from project_gutenberg_full_text_search_spark.entry_queries import build_registry
-    from project_gutenberg_full_text_search_spark.session import get_spark
+    from project_gutenberg_full_text_search_spark.session import get_spark, host_cpus
 
+    cpus = host_cpus()
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus,
                       app_name="jobtrace")
     sc = spark.sparkContext
